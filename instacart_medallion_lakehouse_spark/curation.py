@@ -32,9 +32,10 @@ from .functions.text import (
     stopword_hits,
     tokens,
 )
-from .io import read_table, write_table
+from .io import read_table
 from .operators.dedup import minhash_lsh_pairs
 from .pins import pin
+from .versioned import read_versioned
 
 
 @dataclass
@@ -201,10 +202,10 @@ def run_curation(
     res.n_raw = raw.count()
     quality.assert_row_count_nonzero(res.n_raw, "curation.raw")
 
-    scored = score_documents(raw)
-    write_table(scored, f"{out_dir}/silver/documents_scored")
+    res.n_scored = quality.write_with_observed_gates(
+        score_documents(raw), f"{out_dir}/silver/documents_scored", "curation.scored"
+    )["n_rows"]
     scored = read_table(spark, f"{out_dir}/silver/documents_scored")
-    res.n_scored = scored.count()
     quality.reconcile_row_counts(res.n_raw, res.n_scored, 0.0, "documents_scored")
 
     passed = scored.filter(F.col("quality_score") >= min_quality)
@@ -213,11 +214,11 @@ def run_curation(
     exact = drop_exact_duplicates(passed)
     res.n_after_exact_dedup = exact.count()
 
-    curated = drop_near_duplicates(exact, threshold=near_dup_threshold)
-    write_table(curated, f"{out_dir}/gold/documents_curated")
-    curated = read_table(spark, f"{out_dir}/gold/documents_curated")
-    res.n_after_near_dedup = curated.count()
-    quality.assert_row_count_nonzero(res.n_after_near_dedup, "curation.curated")
+    res.n_after_near_dedup = quality.write_with_observed_gates(
+        drop_near_duplicates(exact, threshold=near_dup_threshold),
+        f"{out_dir}/gold/documents_curated",
+        "curation.curated",
+    )["n_rows"]
 
     res.stage_counts = {
         "raw": res.n_raw,
@@ -267,7 +268,6 @@ def run_training_assembly(
     """
     from .queries_train import _MIX, _MIX_DEFAULT, tokens
     from .queries_text import curated_docs_v2
-    from .versioned import write_versioned
 
     res = AssemblyResult()
     raw = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -323,23 +323,17 @@ def run_training_assembly(
         ),
     )
 
-    # pre-commit row count observed on the commit's own write pass;
-    # the non-empty gate runs INSIDE the commit protocol (post-write,
-    # pre-publish), so a 0-row assembly never becomes the latest version
-    from pyspark.sql import Observation
-
-    obs = Observation("training_set_commit")
-    res.version = write_versioned(
-        packed.observe(obs, F.count(F.lit(1)).alias("n_rows")),
+    # row count observed on the commit's own write pass; the non-empty
+    # gate runs inside the commit (post-write, pre-publish), so a 0-row
+    # assembly never becomes the latest version
+    commit = quality.write_with_observed_gates(
+        packed,
         f"{out_dir}/training_set",
+        "assembly.training_set",
         partition_by=["split"],
-        validate=lambda: quality.assert_row_count_nonzero(
-            int(obs.get["n_rows"]), "assembly.training_set"
-        ),
+        versioned=True,
     )
-    n_assembled = int(obs.get["n_rows"])
-
-    from .versioned import read_versioned
+    res.version, n_assembled = commit["version"], commit["n_rows"]
 
     committed = read_versioned(spark, f"{out_dir}/training_set", res.version)
     res.split_counts = {

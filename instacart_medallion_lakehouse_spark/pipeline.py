@@ -20,6 +20,11 @@ Every write is mode=overwrite (+ overwriteSchema under Delta): the
 whole pipeline re-runs from any point with identical results —
 exactly the reference's re-runnability contract (01:95-102).
 
+Every table write of every layer goes through one gated-write path,
+``quality.write_with_observed_gates``: the row count and the null
+counts ride the write's own pass, and the non-empty and null-rate gates
+are enforced from them (inside the commit for a versioned gold).
+
 Scale notes: each layer is a separate job chain; silver dedup is the
 only full-fact shuffle (window on the PK); gold reuses one cached
 enriched base across all marts (reference 03:42-44,73 does the same).
@@ -33,9 +38,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import quality
-from .io import read_table, write_table
+from .io import read_table
 from .operators.cleanse import dedup_keep_first
 from .plans import marts
+from .versioned import read_versioned
 
 BRONZE_TABLES = [
     "region",
@@ -72,8 +78,9 @@ _LENIENT_DUP_KEYS: dict[str, list[str]] = {
 }
 
 # Null-rate gates enforced at silver, observed on the write pass itself
-# (zero extra scans). PK/FK columns must never be null in healthy data;
-# threshold is GateThresholds.null_rate_default. (The reference's
+# (zero extra scans; quality.write_with_observed_gates). PK/FK columns
+# must never be null in healthy data; threshold is
+# GateThresholds.null_rate_default. (The reference's
 # days_since_prior-style lenient threshold applies to genuinely-nullable
 # business columns — the star schema has none, so only the default-rate
 # gate is wired here; from_yaml still validates both keys.)
@@ -120,18 +127,9 @@ def run_bronze(
                 "_bronze_version": F.lit(BRONZE_VERSION),
             }
         )
-        # gate count OBSERVED on the write pass itself — no post-write
-        # re-scan job per table (quality.write_with_observed_gates is
-        # the general form; here only the non-empty gate applies)
-        from pyspark.sql import Observation
-
-        obs = Observation(f"bronze_{name}")
-        write_table(
-            df.observe(obs, F.count(F.lit(1)).alias("n_rows")),
-            f"{out_dir}/bronze/{name}",
-        )
-        n = int(obs.get["n_rows"])
-        quality.assert_row_count_nonzero(n, f"bronze.{name}")
+        n = quality.write_with_observed_gates(
+            df, f"{out_dir}/bronze/{name}", f"bronze.{name}"
+        )["n_rows"]
         quality.log_layer_stats("bronze", name, n)
         result.bronze_counts[name] = n
         # read back through the format-aware reader: under Delta an
@@ -181,36 +179,16 @@ def run_silver(
             df = dedup_keep_first(
                 df, keys=keys, order_by=[F.col("_ingested_at"), content_hash]
             )
-        cleaned = df.drop("_ingested_at", "_source_file", "_bronze_version")
-        from pyspark.sql import Observation
-
-        obs = Observation(f"silver_{name}")
-        # null-rate gates ride the same write-pass observation as the
-        # row count — zero extra scans per gated column
-        null_cols = _NULL_GATE_COLS.get(name, [])
-        metrics = [F.count(F.lit(1)).alias("n_rows")] + [
-            F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"nulls_{c}")
-            for c in null_cols
-        ]
-        write_table(
-            cleaned.observe(obs, *metrics),
+        n = quality.write_with_observed_gates(
+            df.drop("_ingested_at", "_source_file", "_bronze_version"),
             f"{out_dir}/silver/{name}",
-        )
+            f"silver.{name}",
+            null_rate_columns={
+                c: thresholds.null_rate_default
+                for c in _NULL_GATE_COLS.get(name, [])
+            },
+        )["n_rows"]
         silver_df = read_table(spark, f"{out_dir}/silver/{name}")
-        got = dict(obs.get)  # observed on the write pass, no re-scan
-        n = int(got["n_rows"])
-        for c in null_cols:
-            # compare the RAW rate — rounding first would let e.g.
-            # 0.0010004 sneak under a 0.001 threshold; the 6-dp form is
-            # for the message only (quality.check_null_rate keeps the
-            # reference's rounded-compare semantics, utils/quality.py:48;
-            # this pipeline gate is ours to make exact)
-            rate = (got[f"nulls_{c}"] or 0) / n if n else 0.0
-            if rate > thresholds.null_rate_default:
-                raise quality.DataQualityError(
-                    f"[silver] null rate {rate:.6f} on '{name}.{c}' exceeds "
-                    f"threshold {thresholds.null_rate_default}"
-                )
         if keys is not None:
             quality.check_duplicate_rate(
                 silver_df, keys, thresholds.duplicate_rate, "silver"
@@ -269,34 +247,17 @@ def run_gold(
     }
     out: dict[str, DataFrame] = {}
     for name, (df, part_by) in gold.items():
-        from pyspark.sql import Observation
-
-        obs = Observation(f"gold_{name}")
-        df = df.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-        if versioned_gold:
-            from .versioned import read_versioned, write_versioned
-
-            # the non-empty gate runs INSIDE the commit protocol (after
-            # the data write, before the manifest publish): a 0-row mart
-            # leaves an unpublished orphan and raises — it never becomes
-            # the latest readable version
-            write_versioned(
-                df,
-                f"{out_dir}/gold/{name}",
-                partition_by=part_by,
-                validate=lambda obs=obs, name=name: quality.assert_row_count_nonzero(
-                    int(obs.get["n_rows"]), f"gold.{name}"
-                ),
-            )
-            written = read_versioned(spark, f"{out_dir}/gold/{name}")
-        else:
-            write_table(df, f"{out_dir}/gold/{name}", partition_by=part_by)
-            written = read_table(spark, f"{out_dir}/gold/{name}")
-        n = int(obs.get["n_rows"])  # observed on the write pass, no re-scan
-        quality.assert_row_count_nonzero(n, f"gold.{name}")
+        path = f"{out_dir}/gold/{name}"
+        # versioned: a 0-row mart raises before its manifest publishes,
+        # so it never becomes the latest readable version
+        n = quality.write_with_observed_gates(
+            df, path, f"gold.{name}", partition_by=part_by, versioned=versioned_gold
+        )["n_rows"]
         quality.log_layer_stats("gold", name, n)
         result.gold_counts[name] = n
-        out[name] = written
+        out[name] = (
+            read_versioned(spark, path) if versioned_gold else read_table(spark, path)
+        )
     li.unpersist()
     orders.unpersist()
     return out

@@ -12,7 +12,15 @@ better plans at 100 TB):
 - ``check_duplicate_rate`` uses ``groupBy(pk).count()`` with map-side
   partial aggregation instead of a count-over-partition window
   (reference utils/quality.py:74-79) — a window shuffles every full row,
-  the groupBy shuffles only (key, partial-count) pairs.
+  the groupBy shuffles only (key, partial-count) pairs. The total and
+  the duplicate-group rows come from one aggregation over the grouped
+  counts: one Spark action, not a ``df.count()`` plus the grouped job.
+- ``check_referential_integrity`` takes the non-null FK total and the
+  orphan count from ONE left join to the distinct parent keys, not two
+  counts.
+- ``write_with_observed_gates`` is the one gated-write path every
+  medallion layer and every curation write goes through: the non-empty
+  and null-rate gates ride the write's own pass.
 - composite keys are supported directly (the reference dedups composite
   keys but gates only single columns).
 """
@@ -21,10 +29,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from .io import write_table
 from .logging_util import get_logger
+from .versioned import write_versioned
 
 logger = get_logger("quality")
 
@@ -118,20 +128,26 @@ def check_duplicate_rate(
     """Fraction of rows belonging to any key-group of size > 1.
 
     Counts ALL members of duplicate groups, not just the extras — the
-    reference's exact definition (utils/quality.py:65-94).
+    reference's exact definition (utils/quality.py:65-94). Null keys
+    form a group of their own (groupBy semantics); an empty input gives
+    0.0. One Spark action: the total and the duplicate-group rows are
+    both sums over the per-key counts.
     """
     cols = [columns] if isinstance(columns, str) else list(columns)
-    total = df.count()
-    if total == 0:
-        return 0.0
-    dup_rows = (
+    n = F.col("_grp_n")
+    row = (
         df.groupBy(*cols)
         .agg(F.count(F.lit(1)).alias("_grp_n"))
-        .filter(F.col("_grp_n") > 1)
-        .agg(F.coalesce(F.sum("_grp_n"), F.lit(0)).alias("dups"))
-        .collect()[0]["dups"]
+        .agg(
+            F.sum(n).alias("total"),
+            F.sum(F.when(n > 1, n).otherwise(0)).alias("dups"),
+        )
+        .collect()[0]
     )
-    rate = round(dup_rows / total, 6)
+    total = row["total"] or 0
+    if total == 0:
+        return 0.0
+    rate = round(row["dups"] / total, 6)
     if rate > threshold:
         raise DataQualityError(
             f"[{layer}] duplicate rate {rate:.6f} on {cols} exceeds threshold {threshold}"
@@ -150,19 +166,26 @@ def check_referential_integrity(
 ) -> float:
     """orphan_rate over non-null FK rows; default zero tolerance.
 
-    Semantics: reference utils/quality.py:97-130. The left_anti join
-    broadcasts when the parent key set is small; at 100 TB project the
-    parent to its key column FIRST (done here) so only keys shuffle.
+    Semantics: reference utils/quality.py:97-130. One Spark action: the
+    non-null FK rows LEFT JOIN the distinct parent keys (distinct, so
+    the join never fans out), and one aggregate counts the rows and the
+    unmatched ones. The parent is projected to its key column FIRST, so
+    at 100 TB only keys shuffle, and a small key set broadcasts.
     """
-    non_null = child.filter(F.col(fk).isNotNull())
-    total = non_null.count()
+    parent_keys = parent.select(F.col(pk).alias("__pk")).distinct()
+    row = (
+        child.select(F.col(fk).alias("__fk"))
+        .filter(F.col("__fk").isNotNull())
+        .join(parent_keys, F.col("__fk") == F.col("__pk"), "left")
+        .agg(
+            F.count(F.lit(1)).alias("total"),
+            F.count(F.when(F.col("__pk").isNull(), 1)).alias("orphans"),
+        )
+        .collect()[0]
+    )
+    total, orphans = row["total"], row["orphans"]
     if total == 0:
         return 0.0
-    orphans = non_null.join(
-        parent.select(F.col(pk).alias("__pk")).distinct(),
-        on=F.col(fk) == F.col("__pk"),
-        how="left_anti",
-    ).count()
     rate = round(orphans / total, 6)
     if rate > threshold:
         raise DataQualityError(
@@ -211,55 +234,60 @@ def log_layer_stats(layer: str, table: str, rows: int) -> None:
 def write_with_observed_gates(
     df: DataFrame,
     path: str,
+    table: str,
     null_rate_columns: dict[str, float] | None = None,
-    require_nonzero: bool = True,
-    layer: str = "",
-    mode: str = "overwrite",
+    partition_by: list[str] | None = None,
+    versioned: bool = False,
 ) -> dict:
-    """Write ``df`` to parquet with the quality gates evaluated as
-    OBSERVATIONS of the write job itself — `df.observe` attaches the
-    gate aggregates to the write's own pass over the data, so the
-    null-rate and non-empty checks cost ZERO extra scans/jobs.
+    """Write ``df`` and gate it on metrics observed by the write itself.
 
-    The separate-job gates above (check_null_rate etc., the reference's
-    utils/quality.py shape) re-scan the table once per gate; at 100 TB
-    that doubles (or worse) the ingest cost. This is the production
-    form: one pass writes AND measures, and the gates are enforced from
-    the observed metrics after the action completes. Failing a gate
-    raises AFTER the write (the data landed but is not promoted —
-    callers pair this with the versioned store so the manifest publish
-    is the gate-conditional commit point).
+    ``df.observe`` attaches the row count and the null count of each
+    ``null_rate_columns`` column to the write's own pass, so the gates
+    cost no extra scan. The write goes through ``io.write_table``; with
+    ``versioned=True`` it commits the next snapshot through
+    ``versioned.write_versioned`` instead, and the gates run as its
+    ``validate`` hook (post-write, pre-publish), so a breach never
+    becomes a readable version. A plain write's gates raise after the
+    data landed, halting the pipeline before anything reads it.
 
-    Returns the observed metrics dict:
-    ``{"n_rows": int, "nulls_<col>": int, "null_rate_<col>": float}``.
+    Gates: non-empty, and each column's null rate (against its
+    threshold in ``null_rate_columns``). The null rate is compared RAW
+    — rounding first would let 0.0010004 pass a 0.001 threshold; the
+    6-dp form is for the message only (``check_null_rate`` keeps the
+    reference's rounded compare, utils/quality.py:48).
+
+    Returns ``{"n_rows": int, "nulls_<col>": int, ...}``, plus
+    ``"version"`` for a versioned commit.
     """
-    from pyspark.sql import Observation
-
     null_rate_columns = null_rate_columns or {}
-    obs = Observation(f"gates_{layer or 'table'}")
-    metrics_exprs = [F.count(F.lit(1)).alias("n_rows")]
-    for col in null_rate_columns:
-        metrics_exprs.append(
-            F.sum(F.when(F.col(col).isNull(), 1).otherwise(0)).alias(
-                f"nulls_{col}"
-            )
-        )
-    observed = df.observe(obs, *metrics_exprs)
-    observed.write.mode(mode).parquet(path)
+    obs = Observation(f"gates_{table}")
+    observed = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_rows"),
+        *[
+            F.count(F.when(F.col(c).isNull(), 1)).alias(f"nulls_{c}")
+            for c in null_rate_columns
+        ],
+    )
+    metrics: dict = {}
 
-    got = dict(obs.get)
-    n_rows = got.get("n_rows", 0)
-    out: dict = {"n_rows": n_rows}
-    if require_nonzero and n_rows == 0:
-        raise DataQualityError(f"[{layer}] observed write produced 0 rows")
-    for col, threshold in null_rate_columns.items():
-        nulls = got.get(f"nulls_{col}") or 0
-        rate = round(nulls / n_rows, 6) if n_rows else 0.0
-        out[f"nulls_{col}"] = nulls
-        out[f"null_rate_{col}"] = rate
-        if rate > threshold:
-            raise DataQualityError(
-                f"[{layer}] observed null rate {rate:.6f} on '{col}' "
-                f"exceeds threshold {threshold}"
-            )
-    return out
+    def gates() -> None:
+        metrics.update(obs.get)
+        n = metrics["n_rows"]
+        assert_row_count_nonzero(n, table)
+        for c, threshold in null_rate_columns.items():
+            rate = metrics[f"nulls_{c}"] / n
+            if rate > threshold:
+                raise DataQualityError(
+                    f"[{table}] null rate {rate:.6f} on '{c}' "
+                    f"exceeds threshold {threshold}"
+                )
+
+    if versioned:
+        metrics["version"] = write_versioned(
+            observed, path, partition_by=partition_by, validate=gates
+        )
+    else:
+        write_table(observed, path, partition_by=partition_by)
+        gates()
+    return metrics

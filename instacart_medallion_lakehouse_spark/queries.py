@@ -222,26 +222,6 @@ def oracle_sql() -> dict[str, str]:
     return _windowed(dict(_ORACLE))
 
 
-# Optional cross-query table cache (S9 — the reference pins hot Silver
-# tables across its five gold jobs the same way, 03_gold_metrics.py:42-44).
-# Off by default so single-query callers pay no memory. For long-lived
-# multi-query sessions only: bench.py deliberately does NOT enable it —
-# its per-query clearCache() isolation would unpersist these tables and
-# leave stale un-cached entries in the dict (covered by test_queries
-# cache round-trip).
-_TABLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-_CACHE_ENABLED = False
-
-
-def enable_table_cache(enabled: bool = True) -> None:
-    global _CACHE_ENABLED
-    _CACHE_ENABLED = enabled
-    if not enabled:
-        for df in _TABLE_CACHE.values():
-            df.unpersist()
-        _TABLE_CACHE.clear()
-
-
 # ---------------------------------------------------------------------------
 # Persisted derived-table store ("signature layer").
 #
@@ -443,16 +423,6 @@ def store_backed(df: DataFrame) -> bool:
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if _CACHE_ENABLED:
-        key = (sf_dir, name)
-        if key not in _TABLE_CACHE:
-            df = (
-                read_events(spark, sf_dir)
-                if name == "events"
-                else spark.read.parquet(f"{sf_dir}/{name}.parquet")
-            )
-            _TABLE_CACHE[key] = df.cache()
-        return _TABLE_CACHE[key]
     if name == "events":
         return read_events(spark, sf_dir)
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")

@@ -153,8 +153,8 @@ def write_versioned(
 
     ``validate`` (no-arg callable) runs after the data write completes
     but BEFORE the manifest publish — the gate-conditional commit point
-    quality.write_with_observed_gates documents. Because the write
-    action has finished, any ``df.observe`` metrics are available inside
+    (quality.write_with_observed_gates runs its gates here). Because the
+    write action has finished, any ``df.observe`` metrics are available inside
     the hook; if it raises, the manifest is never published, the staged
     data dir is an ordinary orphan (invisible to readers, reclaimed by
     ``vacuum``), and readers keep serving the previous version.

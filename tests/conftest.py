@@ -15,8 +15,16 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
-def spark():
-    s = build_session("tests", master="local[4]", shuffle_partitions=4)
+def spark(tmp_path_factory):
+    # catalog tables (bucketed store assets, CTAS) land in the session's
+    # tmp dir, not in a spark-warehouse/ under the working directory
+    warehouse = str(tmp_path_factory.mktemp("warehouse"))
+    s = build_session(
+        "tests",
+        master="local[4]",
+        shuffle_partitions=4,
+        extra_conf={"spark.sql.warehouse.dir": warehouse},
+    )
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -84,6 +84,12 @@ class TestConnectedComponents:
         )
         assert out == expected
 
+    def test_zero_pointer_jumps_raises(self, spark):
+        # an invalid jump count is an error, not clamped to 1
+        df = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
+        with pytest.raises(ValueError, match="pointer_jumps"):
+            connected_components(df, edges_unique=True, pointer_jumps=0)
+
     def test_cap_raises_loudly(self, spark):
         # max_rounds=0 can never converge-check a chain: loud error,
         # not silently-partial labels

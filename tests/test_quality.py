@@ -96,7 +96,7 @@ class TestObservedGates:
         df = spark.read.parquet(f"{sf_dir}/orders.parquet")
         out = str(tmp_path / "obs")
         metrics = quality.write_with_observed_gates(
-            df, out, null_rate_columns={"o_custkey": 0.5}, layer="test"
+            df, out, "test", null_rate_columns={"o_custkey": 0.5}
         )
         assert metrics["n_rows"] == df.count()
         want_nulls = df.filter(F.col("o_custkey").isNull()).count()
@@ -115,7 +115,7 @@ class TestObservedGates:
 
         with _pytest.raises(quality.DataQualityError, match="null rate"):
             quality.write_with_observed_gates(
-                df, out, null_rate_columns={"v": 0.5}, layer="test"
+                df, out, "test", null_rate_columns={"v": 0.5}
             )
         # data landed (gate fails AFTER the action; promotion is the
         # caller's versioned-commit step)
@@ -129,5 +129,118 @@ class TestObservedGates:
 
         with _pytest.raises(quality.DataQualityError, match="0 rows"):
             quality.write_with_observed_gates(
-                df, str(tmp_path / "empty"), layer="test"
+                df, str(tmp_path / "empty"), "test"
             )
+
+    def test_versioned_empty_write_never_publishes(self, spark, tmp_path):
+        from instacart_medallion_lakehouse_spark import versioned as V
+
+        df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+        fresh = str(tmp_path / "fresh")
+        with pytest.raises(DataQualityError, match="0 rows"):
+            quality.write_with_observed_gates(
+                df.limit(0), fresh, "test", versioned=True
+            )
+        assert V.list_versions(fresh) == []
+        # a breach on a table with history keeps serving the old version
+        root = str(tmp_path / "tbl")
+        got = quality.write_with_observed_gates(df, root, "test", versioned=True)
+        assert (got["version"], got["n_rows"]) == (1, 2)
+        with pytest.raises(DataQualityError, match="0 rows"):
+            quality.write_with_observed_gates(
+                df.filter("id > 9"), root, "test", versioned=True
+            )
+        assert V.list_versions(root) == [1]
+        assert V.read_versioned(spark, root).count() == 2
+
+    def test_versioned_null_gate_runs_before_publish(self, spark, tmp_path):
+        from instacart_medallion_lakehouse_spark import versioned as V
+
+        df = spark.createDataFrame([(1, None), (2, "b")], "id long, v string")
+        root = str(tmp_path / "tbl")
+        with pytest.raises(DataQualityError, match="null rate"):
+            quality.write_with_observed_gates(
+                df, root, "test", null_rate_columns={"v": 0.4}, versioned=True
+            )
+        assert V.list_versions(root) == []
+
+
+def _sql_executions(spark) -> int:
+    """SQL executions recorded so far, from the in-process status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark._jsparkSession.sharedState().statusStore().executionsCount()
+
+
+def _dup_rate_reference(keys: list) -> float:
+    """The duplicate-rate definition, in plain Python: rows in key
+    groups of size > 1 over all rows (null keys are a group)."""
+    from collections import Counter
+
+    groups = Counter(keys)
+    dups = sum(n for n in groups.values() if n > 1)
+    return round(dups / len(keys), 6) if keys else 0.0
+
+
+def _orphan_rate_reference(fks: list, pks: list) -> float:
+    """The orphan-rate definition, in plain Python: non-null FKs with no
+    parent key, over non-null FKs."""
+    live = [k for k in fks if k is not None]
+    orphans = sum(1 for k in live if k not in set(pks) - {None})
+    return round(orphans / len(live), 6) if live else 0.0
+
+
+class TestSingleActionGates:
+    @pytest.mark.parametrize(
+        "keys",
+        [
+            [1, 1, 2, 3],
+            [None, None, 1, 2],  # null keys form one group
+            [None, 1, 2],
+            [],  # empty frame
+            [5, 5, 5, 5],
+        ],
+    )
+    def test_duplicate_rate_matches_definition(self, spark, keys):
+        df = spark.createDataFrame([(k,) for k in keys], "k int")
+        assert quality.check_duplicate_rate(df, "k", 1.0) == pytest.approx(
+            _dup_rate_reference(keys), abs=1e-12
+        )
+
+    def test_duplicate_rate_composite_key_with_nulls(self, spark):
+        rows = [(1, None), (1, None), (1, 2), (None, 2), (None, 2)]
+        df = spark.createDataFrame(rows, "a int, b int")
+        assert quality.check_duplicate_rate(df, ["a", "b"], 1.0) == pytest.approx(
+            _dup_rate_reference(rows), abs=1e-12
+        )
+
+    @pytest.mark.parametrize(
+        "fks,pks",
+        [
+            ([1, 2, 99, None], [1, 2]),
+            ([None, None], [1, 2]),  # all-null FKs
+            ([], [1]),  # empty child
+            ([1, 2, 3, 3], [1, 1, 2, 2, 2]),  # parent with duplicate keys
+            ([1, 2], [None, 1]),  # a null parent key matches nothing
+            ([7, 8], []),  # empty parent: every FK is an orphan
+        ],
+    )
+    def test_orphan_rate_matches_definition(self, spark, fks, pks):
+        child = spark.createDataFrame([(k,) for k in fks], "fk int")
+        parent = spark.createDataFrame([(k,) for k in pks], "pk int")
+        got = quality.check_referential_integrity(
+            child, "fk", parent, "pk", threshold=1.0
+        )
+        assert got == pytest.approx(_orphan_rate_reference(fks, pks), abs=1e-12)
+
+    def test_duplicate_rate_is_one_sql_execution(self, spark):
+        df = spark.createDataFrame([(1,), (1,), (2,), (None,)], "k int")
+        before = _sql_executions(spark)
+        quality.check_duplicate_rate(df, "k", 1.0)
+        assert _sql_executions(spark) - before == 1
+
+    def test_referential_integrity_is_one_sql_execution(self, spark):
+        child = spark.createDataFrame([(1,), (2,), (99,), (None,)], "fk int")
+        parent = spark.createDataFrame([(1,), (2,), (2,)], "pk int")
+        before = _sql_executions(spark)
+        quality.check_referential_integrity(child, "fk", parent, "pk", threshold=1.0)
+        assert _sql_executions(spark) - before == 1

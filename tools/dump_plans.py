@@ -54,8 +54,8 @@ def main() -> None:
             f.write(plan)
         q.release_pins()
         print(f"wrote {path} ({len(plan)} chars)")
-    spark.stop()
     q.clear_shared_store()
+    spark.stop()
 
 
 if __name__ == "__main__":
